@@ -52,10 +52,18 @@ import scala.collection.mutable
   * Concurrency model: all mutation is serialized through `this` (single
   * logical writer) — the consistency boundary the reference obtains from
   * DB transactions ("the stream as the consistency and transaction
-  * boundary", reference README.md:25). Reads snapshot driver state under
-  * the lock but run their Spark jobs outside it, so subscription polling
-  * does not contend with appends; only [[compact]] (which swaps files)
-  * excludes readers, via a read-write structure lock. ACROSS processes
+  * boundary", reference README.md:25). A paged read is served one of two
+  * ways, chosen by its range alone. A page that lies wholly in the
+  * memtable (positions are dense, so any range starting at or above the
+  * memtable's first position; an empty page past the head included) is
+  * cut from the buffered rows under the lock, with the same tombstone
+  * rules the Spark plan applies — no planner round trip, no job. Any
+  * other page snapshots driver state under the lock and runs one Spark
+  * job outside it, so flushed-log reads do not contend with appends; only
+  * [[compact]] (which swaps files) excludes readers, via a read-write
+  * structure lock. Every append signals an in-process notifier
+  * ([[waitForAppend]]), so a caught-up subscription wakes on the append
+  * itself instead of on its next poll. ACROSS processes
   * the same invariant is enforced by an exclusive [[WriterLease]]
   * (`<root>/LOCK`, heartbeat + fencing epoch): a second store opening
   * the same root fails loudly (strict mode, the default — a healthy
@@ -82,7 +90,6 @@ final class SparkStreamStore(
     rootDir: String,
     clock: Clock = Clock.System,
     trackDeletes: Boolean = true,
-    scavengeSynchronously: Boolean = true, // retained for API compatibility; scavenge is now always a cheap synchronous tombstone write
     journalEvery: Int = 64,
     maxCachedChain: Int = 100000,
     autoCompactEvery: Int = 0, // >0: background-compact after that many flushed log segments
@@ -229,6 +236,15 @@ final class SparkStreamStore(
     WriterLease.acquire(fs, root, leaseTimeoutMs, leaseHeartbeatMs, log)
 
   recover()
+
+  /** The append notifier behind [[waitForAppend]] (ref shape:
+    * `Subscriptions/IStreamStoreNotifier.cs`): the head as of the last
+    * append and whether [[close]] has run, both guarded by `appendSignal`.
+    * Appends take this monitor while holding `this`; waiters never take
+    * `this` while holding it. */
+  private val appendSignal = new Object
+  private var signalledHead: Long = nextPosition - 1
+  private var signalClosed = false
 
   // ------------------------------------------------------------------
   // Append (ref: AppendToStream.sql:1-177; InMemoryStream.cs:38-163)
@@ -379,6 +395,7 @@ final class SparkStreamStore(
       head.position = base + messages.length - 1
       heads.persist(streamId, head)
       nextPosition = base + messages.length
+      appendSignal.synchronized { signalledHead = nextPosition - 1; appendSignal.notifyAll() }
       dirtyStreams += streamId
       if (streamId.startsWith("$$")) applyMetadataToTarget(streamId.drop(2))
       head.maxCount.foreach(mc => scavenge(streamId, head, mc))
@@ -545,9 +562,8 @@ final class SparkStreamStore(
   private def memtableRows(): java.util.List[Row] = {
     val out = new java.util.ArrayList[Row](memtable.length)
     memtable.foreach { r =>
-      val ts = new java.sql.Timestamp(Math.floorDiv(r.createdMicros, 1000000L) * 1000L)
-      ts.setNanos((Math.floorMod(r.createdMicros, 1000000L) * 1000L).toInt)
-      out.add(Row(r.streamId, r.messageId, r.streamVersion, r.position, ts, r.`type`, r.jsonData, r.jsonMetadata))
+      out.add(Row(r.streamId, r.messageId, r.streamVersion, r.position, timestamp(r.createdMicros),
+        r.`type`, r.jsonData, r.jsonMetadata))
     }
     out
   }
@@ -607,15 +623,83 @@ final class SparkStreamStore(
     try f finally l.unlock()
   }
 
-  private def toMessages(rows: Array[Row], prefetch: Boolean): Seq[StreamMessage] =
-    rows.iterator.map { r =>
-      StreamMessage(
-        streamId = r.getString(0), messageId = r.getString(1),
-        streamVersion = r.getInt(2), position = r.getLong(3),
-        createdUtc = r.getTimestamp(4), `type` = r.getString(5),
-        jsonData = if (prefetch) r.getString(6) else null,
-        jsonMetadata = r.getString(7))
-    }.toSeq
+  /** A page's rows, at most `limit + 1` of them: the ones the memtable
+    * answered under the lock (Left), or else one Spark job running `query`
+    * over the logical-log snapshot (Right). */
+  private def pageRows(src: Either[Seq[MessageRow], DataFrame], prefetch: Boolean)(
+      query: DataFrame => DataFrame): IndexedSeq[StreamMessage] = src match {
+    case Left(rows) =>
+      rows.iterator.map { r =>
+        StreamMessage(r.streamId, r.messageId, r.streamVersion, r.position, timestamp(r.createdMicros),
+          r.`type`, if (prefetch) r.jsonData else null, r.jsonMetadata)
+      }.toIndexedSeq
+    case Right(df) =>
+      query(df).collect().iterator.map { r =>
+        StreamMessage(
+          streamId = r.getString(0), messageId = r.getString(1),
+          streamVersion = r.getInt(2), position = r.getLong(3),
+          createdUtc = r.getTimestamp(4), `type` = r.getString(5),
+          jsonData = if (prefetch) r.getString(6) else null,
+          jsonMetadata = r.getString(7))
+      }.toIndexedSeq
+  }
+
+  // ---- memtable-resident pages (callers hold `this`) ----
+
+  /** The memtable's first position. Positions are dense and every flushed
+    * segment lies below it, so a range starting here or above is wholly
+    * in driver memory; at [[Position.Start]] the whole log is. */
+  private def memtableStart: Long = nextPosition - memtable.length
+
+  /** [[messagesDF]]'s three tombstone rules, applied to one buffered row. */
+  private def survives(r: MessageRow): Boolean =
+    streamTombs.get(r.streamId).forall(r.position > _) &&
+      cutoffs.get(r.streamId).forall { case (ceil, asOf) => r.streamVersion > ceil || r.position > asOf } &&
+      !msgTombs.contains(r.position)
+
+  /** Surviving rows at positions >= `from`, at most `limit`; None when
+    * the range starts below the memtable. */
+  private def memAllForwards(from: Long, limit: Int): Option[Seq[MessageRow]] = {
+    val start = memtableStart
+    if (from < start && start > Position.Start) None
+    else {
+      val i0 = if (from >= nextPosition) memtable.length else math.max(from - start, 0L).toInt
+      Some(Iterator.range(i0, memtable.length).map(memtable(_)).filter(survives).take(limit).toSeq)
+    }
+  }
+
+  /** Surviving rows at positions <= `from`, newest first, at most
+    * `limit`; None when fewer than `limit` survive in the memtable and
+    * flushed rows lie below it. */
+  private def memAllBackwards(from: Long, limit: Int): Option[Seq[MessageRow]] = {
+    val start = memtableStart
+    val n = if (from >= nextPosition) memtable.length else math.max(from - start + 1, 0L).toInt
+    val rows = Iterator.range(n - 1, -1, -1).map(memtable(_)).filter(survives).take(limit).toSeq
+    if (rows.length == limit || start == Position.Start) Some(rows) else None
+  }
+
+  /** The stream's buffered rows of its current incarnation (older ones lie
+    * at or below its stream tombstone), in version order, and the lowest
+    * version the memtable holds all of: the first buffered row's, or one
+    * past the head when none is buffered. Every surviving row of the
+    * stream at or above that version is among the rows returned. */
+  private def memStream(streamId: String, head: Head): (IndexedSeq[MessageRow], Int) = {
+    val tomb = streamTombs.getOrElse(streamId, -1L)
+    val rows = memtable.iterator.filter(r => r.streamId == streamId && r.position > tomb).toIndexedSeq
+    (rows, rows.headOption.fold(head.version + 1)(_.streamVersion))
+  }
+
+  private def memStreamForwards(streamId: String, head: Head, fromV: Int, limit: Int): Option[Seq[MessageRow]] = {
+    val (rows, resident) = memStream(streamId, head)
+    if (fromV < resident) None
+    else Some(rows.iterator.filter(r => r.streamVersion >= fromV && survives(r)).take(limit).toSeq)
+  }
+
+  private def memStreamBackwards(streamId: String, head: Head, fromV: Int, limit: Int): Option[Seq[MessageRow]] = {
+    val (rows, resident) = memStream(streamId, head)
+    val picked = rows.reverseIterator.filter(r => r.streamVersion <= fromV && survives(r)).take(limit).toSeq
+    if (picked.length == limit || resident == StreamVersion.Start) Some(picked) else None
+  }
 
   /** TTL filter, applied post-read on the driver exactly like the reference
     * (`ReadonlyStreamStoreBase.cs:394-490`): expired messages are dropped
@@ -662,16 +746,12 @@ final class SparkStreamStore(
   override def readAllForwards(from: Long, maxCount: Int, prefetch: Boolean): ReadAllPage = withReadLock {
     require(maxCount > 0)
     val fromPos = if (from == Position.End) Long.MaxValue else from
-    val df = synchronized(messagesDF)
-    val rows = df
-      .filter(col("position") >= fromPos)
-      .orderBy(col("position"))
-      .limit(maxCount + 1)
-      .collect()
+    val rows = pageRows(synchronized(memAllForwards(fromPos, maxCount + 1).toLeft(messagesDF)), prefetch)(
+      _.filter(col("position") >= fromPos).orderBy(col("position")).limit(maxCount + 1))
     val isEnd = rows.length <= maxCount
-    val page = toMessages(rows.take(maxCount), prefetch)
+    val page = rows.take(maxCount)
     val nextPos =
-      if (!isEnd) rows(maxCount).getLong(3)
+      if (!isEnd) rows(maxCount).position
       else if (page.nonEmpty) page.last.position + 1
       else fromPos
     val kept = filterExpired(page)
@@ -684,12 +764,8 @@ final class SparkStreamStore(
     // End sentinel => start from the largest position (ref:
     // PostgresStreamStore.ReadAll.cs:94 uses long.MaxValue)
     val fromPos = if (from == Position.End) Long.MaxValue else from
-    val df = synchronized(messagesDF)
-    val rows = df
-      .filter(col("position") <= fromPos)
-      .orderBy(col("position").desc)
-      .limit(maxCount + 1)
-      .collect()
+    val rows = pageRows(synchronized(memAllBackwards(fromPos, maxCount + 1).toLeft(messagesDF)), prefetch)(
+      _.filter(col("position") <= fromPos).orderBy(col("position").desc).limit(maxCount + 1))
     if (rows.isEmpty)
       // nothing at or below `from`: next is Start regardless of input
       // (ref: ReadAll.cs:109-119)
@@ -697,9 +773,9 @@ final class SparkStreamStore(
         ReadDirection.Backward, Nil,
         () => readAllBackwards(Position.Start, maxCount, prefetch))
     val isEnd = rows.length <= maxCount
-    val page = toMessages(rows.take(maxCount), prefetch)
+    val page = rows.take(maxCount)
     val nextPos =
-      if (!isEnd) rows(maxCount).getLong(3)
+      if (!isEnd) rows(maxCount).position
       else Position.Start // exhausted
     val kept = filterExpired(page)
     // the page reports the RESOLVED start: its first message's position
@@ -711,23 +787,23 @@ final class SparkStreamStore(
 
   override def readStreamForwards(streamId: String, fromVersion: Int, maxCount: Int, prefetch: Boolean): ReadStreamPage = withReadLock {
     require(maxCount > 0)
-    val snap = synchronized(heads.get(streamId).map(h => (h.version, h.position, messagesDF)))
+    val fromV = math.max(fromVersion, 0)
+    val snap = synchronized(heads.get(streamId).map(h => (h.version, h.position,
+      memStreamForwards(streamId, h, fromV, maxCount + 1).toLeft(messagesDF))))
     snap match {
       case None =>
         ReadStreamPage(streamId, PageReadStatus.StreamNotFound, fromVersion, StreamVersion.End,
           StreamVersion.End, Position.End, ReadDirection.Forward, isEnd = true, Nil,
           () => readStreamForwards(streamId, fromVersion, maxCount, prefetch))
-      case Some((headVersion, headPosition, df)) =>
-        val fromV = math.max(fromVersion, 0)
-        val rows = df
+      case Some((headVersion, headPosition, src)) =>
+        val rows = pageRows(src, prefetch)(_
           .filter(col("streamId") === streamId && col("streamVersion") >= fromV)
           .orderBy(col("streamVersion"))
-          .limit(maxCount + 1)
-          .collect()
+          .limit(maxCount + 1))
         val isEnd = rows.length <= maxCount
-        val page = toMessages(rows.take(maxCount), prefetch)
+        val page = rows.take(maxCount)
         val nextV =
-          if (!isEnd) rows(maxCount).getInt(2)
+          if (!isEnd) rows(maxCount).streamVersion
           else headVersion + 1
         val kept = filterExpired(page)
         ReadStreamPage(streamId, PageReadStatus.Success, fromVersion, nextV, headVersion,
@@ -738,23 +814,23 @@ final class SparkStreamStore(
 
   override def readStreamBackwards(streamId: String, fromVersion: Int, maxCount: Int, prefetch: Boolean): ReadStreamPage = withReadLock {
     require(maxCount > 0)
-    val snap = synchronized(heads.get(streamId).map(h => (h.version, h.position, messagesDF)))
+    val fromV = if (fromVersion == StreamVersion.End) Int.MaxValue else fromVersion
+    val snap = synchronized(heads.get(streamId).map(h => (h.version, h.position,
+      memStreamBackwards(streamId, h, fromV, maxCount + 1).toLeft(messagesDF))))
     snap match {
       case None =>
         ReadStreamPage(streamId, PageReadStatus.StreamNotFound, fromVersion, StreamVersion.End,
           StreamVersion.End, Position.End, ReadDirection.Backward, isEnd = true, Nil,
           () => readStreamBackwards(streamId, fromVersion, maxCount, prefetch))
-      case Some((headVersion, headPosition, df)) =>
-        val fromV = if (fromVersion == StreamVersion.End) Int.MaxValue else fromVersion
-        val rows = df
+      case Some((headVersion, headPosition, src)) =>
+        val rows = pageRows(src, prefetch)(_
           .filter(col("streamId") === streamId && col("streamVersion") <= fromV)
           .orderBy(col("streamVersion").desc)
-          .limit(maxCount + 1)
-          .collect()
+          .limit(maxCount + 1))
         val isEnd = rows.length <= maxCount
-        val page = toMessages(rows.take(maxCount), prefetch)
+        val page = rows.take(maxCount)
         val nextV =
-          if (!isEnd) rows(maxCount).getInt(2)
+          if (!isEnd) rows(maxCount).streamVersion
           else StreamVersion.End
         val kept = filterExpired(page)
         ReadStreamPage(streamId, PageReadStatus.Success, fromVersion, nextV, headVersion,
@@ -772,12 +848,35 @@ final class SparkStreamStore(
     synchronized { heads.get(streamId).map(_.version).getOrElse(StreamVersion.End) }
 
   override def readMessageData(streamId: String, streamVersion: Int): Option[String] = withReadLock {
-    synchronized(messagesDF)
-      .filter(col("streamId") === streamId && col("streamVersion") === streamVersion)
-      .select("jsonData")
-      .collect()
-      .headOption
-      .map(_.getString(0))
+    // a buffered version is looked up in the memtable; a deleted stream
+    // (no head) or a flushed version takes one Spark job
+    val src = synchronized(heads.get(streamId).flatMap { h =>
+      val (rows, resident) = memStream(streamId, h)
+      if (streamVersion < resident) None
+      else Some(rows.find(r => r.streamVersion == streamVersion && survives(r)).map(_.jsonData))
+    }.toLeft(messagesDF))
+    src match {
+      case Left(data) => data
+      case Right(df) =>
+        df.filter(col("streamId") === streamId && col("streamVersion") === streamVersion)
+          .select("jsonData")
+          .collect()
+          .headOption
+          .map(_.getString(0))
+    }
+  }
+
+  /** Woken by every append and by [[close]]; the timeout is the fallback. */
+  override def waitForAppend(position: Long, timeoutMs: Long): Boolean = {
+    val deadline = System.nanoTime() + timeoutMs * 1000000L
+    appendSignal.synchronized {
+      var left = timeoutMs
+      while (!signalClosed && signalledHead <= position && left > 0) {
+        appendSignal.wait(left)
+        left = (deadline - System.nanoTime()) / 1000000L
+      }
+      !signalClosed
+    }
   }
 
   // ------------------------------------------------------------------
@@ -1456,6 +1555,8 @@ final class SparkStreamStore(
   }
 
   override def close(): Unit = {
+    // wake every waitForAppend: no append follows a close
+    appendSignal.synchronized { signalClosed = true; appendSignal.notifyAll() }
     // Drain background work BEFORE closing the filesystem: an in-flight
     // TTL purge or auto-compaction otherwise runs against a closed
     // FileSystem and its writes are silently lost. Shutdown happens
@@ -1535,6 +1636,13 @@ object SparkStreamStore {
     StructField("maxCount", IntegerType, nullable = true)))
 
   private val Mapper = new ObjectMapper()
+
+  /** A buffered row's `createdUtc`, as Spark's parquet reader returns it. */
+  private def timestamp(micros: Long): java.sql.Timestamp = {
+    val ts = new java.sql.Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
+    ts.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
+    ts
+  }
 
   private final case class Tomb(kind: String, streamId: String, position: Long, ceiling: Int, asOf: Long)
 

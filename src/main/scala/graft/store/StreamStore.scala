@@ -52,4 +52,16 @@ trait StreamStore extends AutoCloseable {
     * (ref: lazy `GetJsonData`, `PostgresStreamStore.cs:142-166`). Returns
     * None if the message has since been deleted. */
   def readMessageData(streamId: String, streamVersion: Int): Option[String]
+
+  /** Block until the head position passes `position` or `timeoutMs` run
+    * out; false once the store is closed (no append will follow). This
+    * is the notifier a caught-up subscription waits on between pages
+    * (ref: `Subscriptions/IStreamStoreNotifier.cs`). The default cannot
+    * see appends, so it sleeps the whole timeout — the reference's
+    * `PollingStreamStoreNotifier`; a store that sees its own appends
+    * wakes the waiter as soon as one lands. */
+  def waitForAppend(position: Long, timeoutMs: Long): Boolean = {
+    Thread.sleep(timeoutMs)
+    true
+  }
 }

@@ -3,6 +3,11 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 
+import java.util.concurrent.{LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
 /** Crash-tolerant reads of the `Online*` family's batch-partitioned
   * parquet state directories.
   *
@@ -40,5 +45,34 @@ private[graft] object IndexIo {
               m.contains("UNABLE_TO_INFER_SCHEMA") || m.contains("infer schema")) =>
           None
       }
+  }
+
+  /** Run one batch's independent state writes concurrently and return
+    * when all have finished, rethrowing the first failure — the batch
+    * pays the slowest write, not the sum. The last write
+    * runs on the calling thread, keeping its Spark job group; the others
+    * run on one named pool of at most [[MaxPooledWrites]] daemon threads,
+    * never on Scala's global ExecutionContext, which any other library
+    * code in the driver may be holding. */
+  def writeAll(writes: (() => Unit)*): Unit = {
+    val pooled = writes.init.map(w => Future(w())(writePool))
+    writes.last()
+    pooled.foreach(Await.result(_, Duration.Inf))
+  }
+
+  /** Pooled writes of one batch at most (OnlineDedup overlaps three
+    * writes, one on its own thread); more queue. */
+  private val MaxPooledWrites = 2
+
+  private lazy val writePool: ExecutionContext = {
+    val n = new AtomicInteger
+    val pool = new ThreadPoolExecutor(MaxPooledWrites, MaxPooledWrites,
+      30L, TimeUnit.SECONDS, new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+        val t = new Thread(r, s"graft-state-write-${n.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true) // an idle driver keeps no threads
+    ExecutionContext.fromExecutorService(pool)
   }
 }

@@ -74,17 +74,11 @@ final class OnlineDedup(
       .join(survivors.select(col(idCol).as("id")), Seq("id"), "left_semi")
       .localCheckpoint() // shingle + bucket writers below
     val sb = Dedup.bucketsFromHashes(ssh, k, bands)
-    // three independent writer jobs over pinned frames — overlap them
-    // (guide §2.6) so the batch pays the slowest write, not the sum;
-    // each stays an idempotent own-batch overwrite, and any failure
-    // fails the batch (foreachBatch retries it)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val writes = Seq((survivors, docsDir), (sb, bucketsDir), (ssh, shinglesDir))
-      .map { case (df, dir) => Future {
-        df.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
-      } }
-    writes.foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
+    // three independent writer jobs over pinned frames, overlapped; each
+    // stays an idempotent own-batch overwrite, and any failure fails the
+    // batch (foreachBatch retries it)
+    IndexIo.writeAll(Seq((survivors, docsDir), (sb, bucketsDir), (ssh, shinglesDir))
+      .map { case (df, dir) => () => df.write.mode("overwrite").parquet(s"$dir/batch=$batchId") }: _*)
   }
 
   /** The corpus of survivors accumulated so far. */

@@ -136,20 +136,15 @@ final class OnlineSuffixDedup(
       .filter(col("_hit") || (col("_mxd") =!= col("_own") &&
         col("doc_id") =!= col("_own")))
       .select("doc_id", "pos")
-    // the two sinks are independent jobs over the pinned frames —
-    // overlap them (guide §2.6) so the batch pays the slower one, not
-    // the sum; both writes stay idempotent own-batch overwrites, and a
+    // the two sinks are independent jobs over the pinned frames,
+    // overlapped; both writes stay idempotent own-batch overwrites, and a
     // failure in either still fails the batch (foreachBatch retries it)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val indexAppend = Future {
-      marked.filter(!col("_hit") && col("_rn") === 1) // discover-once
+    IndexIo.writeAll(
+      () => marked.filter(!col("_hit") && col("_rn") === 1) // discover-once
         .select("h")
-        .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
-    }
-    SuffixDedup.cutCovered(base, flagged, minLen)
-      .write.mode("overwrite").parquet(s"$docsDir/batch=$batchId")
-    Await.result(indexAppend, scala.concurrent.duration.Duration.Inf)
+        .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId"),
+      () => SuffixDedup.cutCovered(base, flagged, minLen)
+        .write.mode("overwrite").parquet(s"$docsDir/batch=$batchId"))
   }
 
   /** Everything ingested so far, cleaned — (doc_id, kept_text,

@@ -27,9 +27,17 @@ trait Subscription extends AutoCloseable {
 
 /** Catch-up subscriptions over the store: ordered at-least-once replay that
   * transitions to tail-follow, exactly the reference's model — a pull loop
-  * of paged reads plus a head-position poller
+  * of paged reads that, once caught up, waits on the store's append
+  * notifier ([[StreamStore.waitForAppend]])
   * (ref: `Subscriptions/AllStreamSubscription.cs:33-232`,
-  * `StreamSubscription.cs:36-120`, `PollingStreamStoreNotifier.cs:51-82`).
+  * `StreamSubscription.cs:36-120`, `IStreamStoreNotifier.cs`). On a
+  * [[SparkStreamStore]] the append itself wakes the loop, and the page it
+  * then reads is cut from the memtable without a Spark job; JDBC and HTTP
+  * stores keep the reference's polling notifier
+  * (`PollingStreamStoreNotifier.cs:51-82`), so `pollIntervalMs` is their
+  * poll interval and only a fallback timeout here. Closing a
+  * [[SparkStreamStore]] ends its subscriptions with `Disposed`, as the
+  * reference's store `OnDispose` event does.
   *
   * The push side is strictly sequential per subscription
   * (`AllStreamSubscription.cs:207-232`): messages are delivered one at a
@@ -60,7 +68,7 @@ object Subscriptions {
       onDropped: (SubscriptionDroppedReason, Option[Throwable]) => Unit = (_, _) => (),
       pageSize: Int = DefaultPageSize,
       pollIntervalMs: Long = 100L): Subscription =
-    new PollingSubscription(pollIntervalMs) {
+    new PollingSubscription(store, pollIntervalMs) {
       private var next: Long = continueAfterPosition match {
         case None => Position.Start
         case Some(Position.End) => store.readHeadPosition() + 1
@@ -91,7 +99,7 @@ object Subscriptions {
       onDropped: (SubscriptionDroppedReason, Option[Throwable]) => Unit = (_, _) => (),
       pageSize: Int = DefaultPageSize,
       pollIntervalMs: Long = 100L): Subscription =
-    new PollingSubscription(pollIntervalMs) {
+    new PollingSubscription(store, pollIntervalMs) {
       private var next: Int = continueAfterVersion match {
         case None => StreamVersion.Start
         case Some(StreamVersion.End) => store.readStreamHeadVersion(streamId) + 1
@@ -149,8 +157,8 @@ object Subscriptions {
   }
 
   /** The pull-loop skeleton: page until IsEnd, signal caught-up on
-    * transitions, poll for new appends, notify drop exactly once. */
-  private abstract class PollingSubscription(pollIntervalMs: Long) extends Subscription {
+    * transitions, wait for the next append, notify drop exactly once. */
+  private abstract class PollingSubscription(store: StreamStore, pollIntervalMs: Long) extends Subscription {
     @volatile protected var _lastProcessed: Long = -1L
     private val droppedOnce = new AtomicBoolean(false)
     @volatile private var running = true
@@ -179,11 +187,15 @@ object Subscriptions {
     private val thread = new Thread(() => {
       try {
         while (running) {
+          // the head BEFORE the page: an append landing between the page
+          // and the wait has already moved past it, so it is never missed
+          val head = store.readHeadPosition()
           val atEnd = pullPush()
           // caught-up is (re)raised on state transitions
           // (ref: AllStreamSubscription.cs:123-132)
           if (atEnd != wasCaughtUp) { wasCaughtUp = atEnd; caughtUp(atEnd) }
-          if (atEnd) Thread.sleep(pollIntervalMs) // ref notifier polls, :27 (1000ms)
+          // ref notifier: woken by the append, or polls every pollIntervalMs
+          if (atEnd && !store.waitForAppend(head, pollIntervalMs)) running = false
         }
         notifyDropped(SubscriptionDroppedReason.Disposed, None)
       } catch {

@@ -448,6 +448,21 @@ class AcceptanceParitySpec extends StoreAcceptanceBehaviors {
   }
 }
 
+/** The same acceptance behaviors with every append flushed to its own
+  * parquet segment (`flushEveryRows = 1`). The memtable is then always
+  * empty, so every page below the head is one Spark job over the flushed
+  * log — the read path the other parquet fixtures no longer reach, since
+  * their logs stay in the memtable and are paged from memory. */
+class FlushedLogAcceptanceSpec extends StoreAcceptanceBehaviors {
+  protected def withStore[T](name: String, trackDeletes: Boolean = true,
+      clock: Clock = Clock.System)(f: StreamStore => T): T = {
+    val store = new SparkStreamStore(SparkTestSession.spark,
+      SparkTestSession.tempDir(name), clock, trackDeletes = trackDeletes,
+      flushEveryRows = 1)
+    try f(store) finally store.close()
+  }
+}
+
 /** The same acceptance behaviors over the parquet store with heads
   * spilled to Derby and only 8 hot heads in memory — every behavior must
   * be oblivious to whether a head was resident or reloaded. */

@@ -8,7 +8,7 @@ import org.scalatest.BeforeAndAfterEach
 import org.scalatest.concurrent.Eventually
 import org.scalatest.time.{Seconds, Span, Millis}
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, LinkedBlockingQueue, TimeUnit}
 import scala.jdk.CollectionConverters._
 
 /** Catch-up subscriptions, ported from `AcceptanceTests.Subscriptions.cs`. */
@@ -144,6 +144,61 @@ class SubscriptionSpec extends AnyFunSuite with BeforeAndAfterEach with Eventual
     streamSub.close(); streamSub.close()
     allSub.close(); allSub.close()
     assert(!streamSub.isRunning && !allSub.isRunning)
+  }
+
+  test("an append wakes caught-up subscriptions long before the poll interval") {
+    store.appendToStream("a", ExpectedVersion.NoStream, msgs(1))
+    val all = new LinkedBlockingQueue[Long]()
+    val one = new LinkedBlockingQueue[Int]()
+    val caught = new CountDownLatch(2)
+    val subs = Seq(
+      Subscriptions.subscribeToAll(store, None, m => all.add(m.position),
+        b => if (b) caught.countDown(), pollIntervalMs = 60000L),
+      Subscriptions.subscribeToStream(store, "a", None, m => one.add(m.streamVersion),
+        b => if (b) caught.countDown(), pollIntervalMs = 60000L))
+    try {
+      assert(caught.await(30, TimeUnit.SECONDS))
+      assert(all.poll(30, TimeUnit.SECONDS) === 0L && one.poll(30, TimeUnit.SECONDS) === 0)
+      Thread.sleep(200) // both are waiting on the store now
+      store.appendToStream("a", 0, msgs(2))
+      assert(all.poll(2, TimeUnit.SECONDS) === 1L)
+      assert(one.poll(2, TimeUnit.SECONDS) === 1)
+    } finally subs.foreach(_.close())
+  }
+
+  test("close during the wait for an append drops with Disposed at once") {
+    val drops = new ConcurrentLinkedQueue[SubscriptionDroppedReason]()
+    val dropped = new CountDownLatch(1)
+    val caught = new CountDownLatch(1)
+    val sub = Subscriptions.subscribeToAll(store, None, _ => (),
+      b => if (b) caught.countDown(),
+      onDropped = (r, _) => { drops.add(r); dropped.countDown() }, pollIntervalMs = 60000L)
+    assert(caught.await(30, TimeUnit.SECONDS))
+    Thread.sleep(200) // waiting on the store now
+    sub.close()
+    assert(dropped.await(1, TimeUnit.SECONDS))
+    assert(drops.asScala.toSeq === Seq(SubscriptionDroppedReason.Disposed))
+  }
+
+  test("closing the store wakes its waiting subscriptions, which drop with Disposed") {
+    val own = new SparkStreamStore(spark, SparkTestSession.tempDir("graft-sub-close"))
+    val drops = new ConcurrentLinkedQueue[SubscriptionDroppedReason]()
+    val dropped = new CountDownLatch(2)
+    val caught = new CountDownLatch(2)
+    val onDropped = (r: SubscriptionDroppedReason, _: Option[Throwable]) => { drops.add(r); dropped.countDown() }
+    val subs = Seq(
+      Subscriptions.subscribeToAll(own, None, _ => (), b => if (b) caught.countDown(),
+        onDropped, pollIntervalMs = 60000L),
+      Subscriptions.subscribeToStream(own, "a", None, _ => (), b => if (b) caught.countDown(),
+        onDropped, pollIntervalMs = 60000L))
+    try {
+      assert(caught.await(30, TimeUnit.SECONDS))
+      Thread.sleep(200) // both are waiting on the store now
+      own.close()
+      assert(dropped.await(1, TimeUnit.SECONDS))
+      assert(drops.asScala.toSeq === Seq.fill(2)(SubscriptionDroppedReason.Disposed))
+      assert(subs.forall(!_.isRunning))
+    } finally subs.foreach(_.close())
   }
 
   test("structured streaming surface delivers appended messages as micro-batches") {
